@@ -11,11 +11,11 @@ progressive, whose EOBn symbols don't fit the Kraft-saturated Annex K
 fixed tables).  Only arithmetic-coded, extended-sequential (12-bit) and
 lossless processes raise NotImplementedError — the Pillow swap-in seam.
 
-Lossy by design: round-trip tests assert closeness (mean abs error), not
-equality — unlike the exact BMP/PPM/PNG/WAV codecs in multimodal.py.
+Lossy by design: round trips are close (mean abs error), not equal.
 
-Used per-payload inside Arrow-batched mapInPandas (multimodal.py), so all
-cost is row-local; nothing here touches Spark.
+Nothing in the engine imports this module any more: the media stack that
+called it per payload is retired, and this codec follows it.  Nothing
+here touches Spark.
 """
 
 from __future__ import annotations

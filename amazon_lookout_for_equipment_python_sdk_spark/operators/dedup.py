@@ -18,8 +18,6 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -926,87 +924,6 @@ def simhash_near_pairs(
     ).select("a", "b", "hamming")
 
 
-def hamming_banded_pairs(
-    sigs: DataFrame,
-    total_bits: int = 64,
-    max_hamming: int = 3,
-    bands: int = 4,
-    sig_col: str = "sig",
-    id_col: str = "id",
-    max_bucket: int | None = 10_000,
-) -> DataFrame:
-    """Generic banded-Hamming near-pair join over ANY integer fingerprint
-    column (SimHash, perceptual image hashes, feature sketches): the
-    ``total_bits``-bit signature splits into ``bands`` equal chunks, and a
-    pair within hamming distance ``bands - 1`` must share an unchanged
-    chunk (pigeonhole) — so for ``max_hamming <= bands - 1`` the banded
-    equi-join is EXACT.  Returns (a, b, hamming).
-
-    Same fused plan as :func:`simhash_near_pairs` (which predates this
-    generalization and keeps its 48-bit specialization): the (id, sig)
-    struct rides through the (band, chunk) buckets, ``bit_count(xor)``
-    verifies inside the pair-expansion lambda's downstream filter, and
-    cross-band duplicates die via first-matching-band ownership (uncapped)
-    or a candidate-level dedup (capped).  ONE shuffle uncapped."""
-    if total_bits % bands:
-        raise ValueError(f"bands {bands} must divide total_bits {total_bits}")
-    chunk_bits = total_bits // bands
-    if max_hamming > bands - 1:
-        raise ValueError(
-            f"banded join is only exact for max_hamming <= bands-1 "
-            f"({bands - 1}); got {max_hamming} — raise `bands`"
-        )
-    chunk_mask = (1 << chunk_bits) - 1
-    chunk_entries = F.array(
-        *[
-            F.struct(
-                F.lit(k).alias("band"),
-                F.shiftright(F.col(sig_col), k * chunk_bits)
-                .bitwiseAND(F.lit(chunk_mask))
-                .alias("bucket"),
-            )
-            for k in range(bands)
-        ]
-    )
-    member = F.struct(F.col(id_col).alias("i"), F.col(sig_col).alias("s"))
-    banded = sigs.select(
-        member.alias("_m"), F.explode(chunk_entries).alias("_e")
-    ).select(
-        "_m", F.col("_e.band").alias("band"), F.col("_e.bucket").alias("bucket")
-    )
-    pairs = _expand_bucket_pairs(
-        banded,
-        "band",
-        max_bucket,
-        pair_pred=lambda a, b: F.bit_count(
-            a["s"].bitwiseXOR(b["s"])
-        ) <= max_hamming,
-    ).select(
-        "band",
-        F.col("_p.a.i").alias("a"),
-        F.col("_p.b.i").alias("b"),
-        F.col("_p.a.s").alias("_sa"),
-        F.col("_p.b.s").alias("_sb"),
-    )
-    match_flags = F.array(
-        *[
-            F.shiftright(F.col("_sa"), k * chunk_bits).bitwiseAND(
-                F.lit(chunk_mask)
-            )
-            == F.shiftright(F.col("_sb"), k * chunk_bits).bitwiseAND(
-                F.lit(chunk_mask)
-            )
-            for k in range(bands)
-        ]
-    )
-    verified = pairs.withColumn(
-        "hamming", F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-    ).filter(F.col("hamming") <= max_hamming)
-    return _dedup_cross_band(
-        verified, match_flags, "band", max_bucket, ["hamming"]
-    ).select("a", "b", "hamming")
-
-
 def _simhash48_udf():
     """Arrow-batched SimHash-48: text -> signed per-bit term-frequency
     votes -> packed 48-bit long, entirely row-local.
@@ -1155,17 +1072,6 @@ def duplicate_spans(
     offsets, one row per maximal duplicated span.
     """
     grams = _char_grams(df, k, text_col, id_col, stride)
-    if os.environ.get("SPARKGRAFT_SPANS_PERSIST_GRAMS", "").strip() == "1":
-        # A/B variant (r16 decade measurement, VERDICT item 3): trade
-        # the second corpus gram explode for ONE DISK_ONLY
-        # materialization of the full gram stream (~40x text bytes:
-        # k-char string + hash + pos per row).  Default OFF — the sf1
-        # and sf3 A/B (BASELINE.md "duplicate_spans persisted-gram A/B")
-        # measured recompute faster at both points; kept as the probe
-        # for re-running the A/B at larger decades.
-        from pyspark import StorageLevel
-
-        grams = grams.persist(StorageLevel.DISK_ONLY).transform(_note_persist)
     # phase 1: frequency on the 64-bit hash — keep positions whose hash
     # is seen 2+ times.  Semi-join against the duplicated-hash set rather
     # than collecting a posting list per gram — a degenerate gram

@@ -54,11 +54,46 @@ _NATIVE_ALLOC_ENV = {
 }
 
 
+_GiB = 1 << 30
+
+
+def _visible_memory_bytes() -> int:
+    """Memory this process may use: the cgroup v2 limit, else MemTotal."""
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            v = f.read().strip()
+        if v != "max":
+            return int(v)
+    except OSError:
+        pass
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) * 1024
+    raise RuntimeError("cannot read MemTotal from /proc/meminfo")
+
+
+def _default_driver_memory(cpus: int, mem: int | None = None) -> str:
+    """Driver heap sized from the host: a quarter of visible memory, and
+    never more than what is left after 1 GiB per Python worker core plus
+    2 GiB for the OS.  The heap is pinned (Xms = Xmx) and pre-touched
+    below, so a heap the host cannot commit kills the JVM at launch."""
+    if mem is None:
+        mem = _visible_memory_bytes()
+    heap = min(mem // 4, mem - cpus * _GiB - 2 * _GiB)
+    if heap < _GiB:
+        raise RuntimeError(
+            f"{mem / _GiB:.1f} GiB visible with {cpus} cores leaves no room "
+            "for a 1 GiB driver heap; set SPARK_DRIVER_MEMORY to override"
+        )
+    return f"{heap // (256 << 20) * 256}m"
+
+
 def get_spark(app_name: str = "lookout_spark", cpus: int | None = None) -> SparkSession:
     """Return (or create) the engine's SparkSession."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
-    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(cpus)
     for k, v in _NATIVE_ALLOC_ENV.items():
         os.environ.setdefault(k, v)
     builder = (

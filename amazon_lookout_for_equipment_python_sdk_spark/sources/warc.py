@@ -19,7 +19,7 @@ Framing (both flavors share it):
   record-streaming reads possible.  Python's ``gzip`` transparently
   reads concatenated members, so decompression is one pass either way.
 
-Scale design (mirrors ``sources/webdataset.py``):
+Scale design:
 
 - **Read**: ``binaryFile`` lists shards — parallelism = #shards, the
   intended crawl-archive contract (Common Crawl ships ~1 GB shards;

@@ -296,50 +296,3 @@ def test_evaluation_plots_end_to_end(spark, synthetic_long, tmp_path):
     assert set(sinfo["series"]) == {"s1", "s2", "s3"}
     assert "Detected events" in sinfo["ranges"]
     assert open(spath).read().startswith("<svg")
-
-
-def test_quality_classifier_learns_and_scores_in_codegen(spark):
-    """Model-based quality filter (ml/quality.py): trains on a labeled
-    sample, separates repetitive junk from varied text on held-out docs,
-    round-trips through its payload, and the scoring plan contains no
-    UDF/MLlib stage (pure codegen dot product)."""
-    import random
-
-    from amazon_lookout_for_equipment_python_sdk_spark.ml.quality import (
-        QualityClassifier,
-    )
-
-    rng = random.Random(5)
-    vocab = ["the", "data", "spark", "cluster", "model", "query", "join",
-             "table", "stream", "batch", "filter", "sort", "key", "value"]
-
-    def good() -> str:
-        return " ".join(rng.choice(vocab) for _ in range(rng.randint(30, 80)))
-
-    def bad() -> str:
-        w = rng.choice(["spam", "buy", "x"])
-        return " ".join([w] * rng.randint(30, 80))
-
-    rows = [(i, good(), 1.0) for i in range(60)] + [
-        (i + 100, bad(), 0.0) for i in range(60)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, label double")
-    train = df.filter("doc_id % 3 != 0")
-    test = df.filter("doc_id % 3 = 0")
-    clf = QualityClassifier().fit(train)
-    scored = clf.score(test)
-    acc = scored.selectExpr(
-        "avg(CAST((quality_prob >= 0.5) = (label = 1.0) AS DOUBLE)) acc"
-    ).first().acc
-    assert acc >= 0.95, acc
-    # payload round-trip gives identical scores
-    clf2 = QualityClassifier.from_payload(clf.to_payload())
-    a = scored.select("doc_id", "quality_prob").collect()
-    b = clf2.score(test).select("doc_id", "quality_prob").collect()
-    assert {(r.doc_id, r.quality_prob) for r in a} == {
-        (r.doc_id, r.quality_prob) for r in b
-    }
-    # the 100 TB path: scoring is plain expressions, no python/MLlib eval
-    plan = clf.score(test)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert clf.filter_quality(test, 0.5).count() > 0

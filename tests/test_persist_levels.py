@@ -80,7 +80,6 @@ REGISTRY = {
     ("plans/relational.py", "q15_q"): "BOUNDED",
     ("streaming/scheduler.py", "_process_batch"): "BOUNDED",
     ("operators/dedup.py", "near_dup_clusters"): "ITER_DESER",
-    ("operators/bpe.py", "bpe_train"): "ITER_DESER",
     # r14: pagerank's node/out-weight/rank frames are |hosts|-
     # proportional (orders below the page corpus), stay at the
     # deserialized default, and the rank frame is released every

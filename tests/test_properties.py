@@ -70,31 +70,6 @@ def test_tz_offset_roundtrip(mins):
     assert parse_tz_offset_minutes(tz_offset_string(mins)) == mins
 
 
-# --- PNG codec: decode(encode(img)) == img for every filter type ------------
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    h=st.integers(min_value=1, max_value=12),
-    w=st.integers(min_value=1, max_value=12),
-    ft=st.integers(min_value=0, max_value=4),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_png_roundtrip_property(h, w, ft, seed):
-    import numpy as np
-
-    from amazon_lookout_for_equipment_python_sdk_spark.operators import (
-        multimodal as mm,
-    )
-
-    img = np.random.default_rng(seed).integers(
-        0, 256, size=(h, w, 3), dtype=np.uint8
-    )
-    np.testing.assert_array_equal(
-        mm.decode_image(mm.encode_png(img, filter_type=ft)), img
-    )
-
-
 # --- redaction is idempotent: replacement tokens never re-match -------------
 
 

@@ -271,21 +271,40 @@ def test_per_task_exec_bytes_master_forms():
 
 
 def test_session_budget_reads_live_conf(spark):
-    """The derivation reads the REAL session conf: the test session is
-    local[8] with a 16 GiB heap -> 1.2 GiB/task, 4x the calibration
-    anchor, so the default window budget is 4e5 here (and explicit
+    """The derivation reads the REAL session conf: the budget follows the
+    heap the session launched with (host-derived unless
+    SPARK_DRIVER_MEMORY overrides it), which is the heap the JVM
+    reports, and the default window budget scales with it (explicit
     budget_rows= still overrides, as every decision pin in this file
     relies on)."""
-    import os as _os
+    from amazon_lookout_for_equipment_python_sdk_spark import session
 
-    if _os.environ.get("SPARK_DRIVER_MEMORY", "16g") != "16g":
-        pytest.skip("budget pin assumes the default 16g test heap")
     cores = int(spark.conf.get("spark.master").split("[")[1].rstrip("]"))
-    expect = int(16 * (1 << 30) * 0.6) // cores
+    heap = rt._parse_mem(spark.conf.get("spark.driver.memory"))
+    assert heap == rt._parse_mem(
+        os.environ.get("SPARK_DRIVER_MEMORY")
+        or session._default_driver_memory(cores)
+    )
+    jvm_max = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    assert 0.9 * heap <= jvm_max <= heap
+    expect = int(heap * 0.6) // cores
     assert rt.per_task_exec_bytes(spark) == expect
     assert rt.session_budget_rows(spark) == rt.derive_budget_rows(
         rt.WINDOW_BUDGET_ROWS, expect
     )
+
+
+def test_default_heap_sized_from_host():
+    """A quarter of visible memory, capped so 1 GiB per core plus 2 GiB
+    stays free; a host with no room for a 1 GiB heap fails by name."""
+    from amazon_lookout_for_equipment_python_sdk_spark import session
+
+    gib = 1 << 30
+    assert session._default_driver_memory(4, 16 * gib) == "4096m"
+    assert session._default_driver_memory(32, 128 * gib) == "32768m"
+    assert session._default_driver_memory(8, 12 * gib) == "2048m"  # cap binds
+    with pytest.raises(RuntimeError, match="SPARK_DRIVER_MEMORY"):
+        session._default_driver_memory(4, 6 * gib)
 
 
 def test_shared_probe_skips_the_scan(spark, monkeypatch):

@@ -525,83 +525,6 @@ def test_streaming_dsir_scoring_matches_batch(spark, tmp_path):
     assert got == want and len(got) == 4
 
 
-def test_streaming_hnsw_serving_matches_batch(spark, tmp_path):
-    """ANN serving over a QUERY STREAM: the broadcast HNSW index answers
-    each micro-batch through foreach_batch_apply identically to the
-    batch pass — the online half of the 'corpus indexes once, queries
-    stream forever' regime."""
-    import numpy as np
-
-    from amazon_lookout_for_equipment_python_sdk_spark.operators import hnsw as hn
-    from amazon_lookout_for_equipment_python_sdk_spark.streaming.pipeline import (
-        foreach_batch_apply,
-    )
-
-    rng = np.random.RandomState(4)
-    dim = 8
-    centers = rng.normal(0, 1, (4, dim))
-    vecs = np.array([centers[i % 4] + rng.normal(0, 0.05, dim) for i in range(60)])
-    corpus = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<double>",
-    )
-    index = hn.hnsw_build(corpus)
-    queries = [(100 + i, vecs[i * 3] + rng.normal(0, 0.02, dim)) for i in range(6)]
-
-    indir = tmp_path / "annq"
-    indir.mkdir()
-
-    def write_batch(name, rows):
-        with open(indir / name, "w") as f:
-            f.write("query_id|emb\n")
-            for qid, v in rows:
-                f.write(f"{qid}|{','.join(str(x) for x in v)}\n")
-
-    stream = (
-        spark.readStream.schema("query_id long, emb string")
-        .option("header", True)
-        .option("sep", "|")
-        .csv(str(indir / "*.csv"))
-        .withColumn(
-            "embedding", F.split("emb", ",").cast("array<double>")
-        )
-        .drop("emb")
-    )
-
-    def serve(batch_df):
-        return hn.hnsw_topk(batch_df, index, k=3, ef=32)
-
-    write_batch("b1.csv", queries[:3])
-    foreach_batch_apply(
-        stream, serve, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    ).awaitTermination()
-    write_batch("b2.csv", queries[3:])
-    foreach_batch_apply(
-        stream, serve, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    ).awaitTermination()
-
-    got = sorted(
-        (r["query_id"], r["vec_id"], r["cos"])
-        for r in spark.read.parquet(str(tmp_path / "out"))
-        .drop("batch_epoch")
-        .collect()
-    )
-    # batch reference over the SAME csv files (identical float parse)
-    qdf = (
-        spark.read.schema("query_id long, emb string")
-        .option("header", True)
-        .option("sep", "|")
-        .csv(str(indir / "*.csv"))
-        .withColumn("embedding", F.split("emb", ",").cast("array<double>"))
-        .drop("emb")
-    )
-    want = sorted(
-        (r["query_id"], r["vec_id"], r["cos"])
-        for r in hn.hnsw_topk(qdf, index, k=3, ef=32).collect()
-    )
-    assert got == want and len(got) == 18
-
-
 def test_streaming_gorilla_archiver_matches_batch_points(spark, tmp_path):
     """Online archiving: each micro-batch Gorilla-compresses its
     (key, window) blocks through foreach_batch_apply; decompressing the
